@@ -255,8 +255,9 @@ object Bench {
         sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_NUM", "1"))
       .config("spark.sql.adaptive.enabled", "true")
       // AQE coalesce floor: keep the 1 MB default. A 64 KB floor was
-      // A/B-tested (tools/bench_one.scala, sf0.1): it buys ~25% on the
-      // compute-dense pair-verify stages (dedup_jaccard_prefix) but
+      // A/B-tested (`runMain graft.BenchOne <name> <sfDir> <cpus>`,
+      // sf0.1): it buys ~25% on the compute-dense pair-verify
+      // stages (dedup_jaccard_prefix) but
       // costs the LM-chain queries 40-100% (bigram/jm/kn_logprob,
       // doremi, dsir, excess_select — many cheap small shuffles where
       // 32 tasks of scheduling overhead dominate 2 tasks of work),
@@ -401,8 +402,9 @@ object Bench {
 }
 
 /** One query under the bench protocol in a CLEAN JVM — the judge's
-  * quiet re-time recipe (tools/bench_one.scala), promoted to a main
-  * so [[Bench]] can self-adjudicate residual budget breaches by
+  * quiet re-time recipe, run as
+  * `runMain graft.BenchOne <name> <sfDir> <cpus>`; [[Bench]] also
+  * spawns it to self-adjudicate residual budget breaches by
   * subprocess. Same session config as the bench; the warehouse is a
   * private temp dir so index-building setups never race the parent
   * session's catalog locations. Stdout contract is ONE line:

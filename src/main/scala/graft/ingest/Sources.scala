@@ -32,13 +32,20 @@ object Sources {
   val SniffBytes: Int = 8192                  // index.py:231
 
   /** Recursive scan with directory pruning (S1) and size gate (S2).
-    * Output schema: path, modificationTime, length, content. */
-  def scan(spark: SparkSession, dir: String): DataFrame =
+    * Output schema: path, modificationTime, length, content. Pruning
+    * matches directories BELOW `dir` only (the [[listUnpruned]]
+    * rule): a corpus stored under an ancestor named `build` or
+    * `target` is still indexed. */
+  def scan(spark: SparkSession, dir: String): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val rootPath = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(root).toUri.getPath
     spark.read.format("binaryFile")
       .option("recursiveFileLookup", "true")
       .load(dir)
-      .filter(!col("path").rlike(pruneRegex))
+      .filter(!concat(lit("/"), relativeSource(col("path"), rootPath)).rlike(pruneRegex))
       .filter(col("length") > 0 && col("length") <= MaxFileBytes)
+  }
 
   /** Text-vs-binary sniff on the first 8 KB: reject if a NUL byte is
     * present (`index.py:236-237`). The reference's 4-encoding decode

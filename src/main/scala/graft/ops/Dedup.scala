@@ -1494,60 +1494,37 @@ object Dedup {
     * writeMaximalIndex), not a quiet partial match. */
   val IndexFormatVersion = 2
 
-  /** `saveAsTable(Overwrite)` on a name NOT in this session's catalog
-    * is a CREATE, and a managed-table CREATE refuses a stale nonempty
-    * location left by a PREVIOUS session's build (an in-memory
-    * catalog forgets its tables at JVM exit, but the warehouse
-    * directory survives). Overwrite semantics across sessions: if the
-    * name is registered, the writer's own overwrite handles it; if
-    * not, clear the stale managed location first. */
-  private def prepareManagedOverwrite(s: SparkSession, table: String): Unit =
-    if (!s.catalog.tableExists(table)) {
-      val ident = s.sessionState.sqlParser.parseTableIdentifier(table)
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(ident))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, /* recursive = */ true)
-    }
+  /** The substring window index: one row per distinct hash;
+    * compaction folds appended duplicates away. */
+  val SubstrIndex: PersistedIndex.Family = PersistedIndex.Family(
+    "substr", PersistedIndex.Bucketed("h"), IndexFormatVersion,
+    fold = _.select(col("h")).distinct())
 
-  private def stampIndexFormat(s: SparkSession, table: String): Unit =
-    s.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
-      s"('graft.index.format' = '$IndexFormatVersion')")
+  /** The maximal atom-window index: per-hash first occurrence;
+    * compaction min-folds the per-segment firsts. */
+  val MaximalIndex: PersistedIndex.Family = PersistedIndex.Family(
+    "maximal", PersistedIndex.Bucketed("h"), IndexFormatVersion,
+    fold = foldMaximalFirsts)
 
-  private[graft] def requireIndexFormat(s: SparkSession, table: String): Unit = {
-    val props = s.sessionState.catalog.getTableMetadata(
-      s.sessionState.sqlParser.parseTableIdentifier(table)).properties
-    val got = props.get("graft.index.format")
-    require(got.contains(IndexFormatVersion.toString),
-      s"index table $table is format ${got.getOrElse("<unstamped>")} but this engine " +
-        s"writes/probes format $IndexFormatVersion — the hash derivation changed " +
-        "(e.g. the split-parity fix), so probing it would mismatch quietly; " +
-        "rebuild the index instead of probing a stale generation")
-  }
+  /** The MinHash band index: compaction recomputes GLOBAL `bucket_n`
+    * (appends count per segment) and rebuilds the `_counts` sidecar
+    * into one row per bucket. No text is re-hashed — the band rows
+    * already carry everything. */
+  val BandIndex: PersistedIndex.Family = PersistedIndex.Family(
+    "band", PersistedIndex.Bucketed("bkey60"), IndexFormatVersion,
+    fold = rows => withBucketN(rows.select(col("doc_id"), col("sig"), col("band"), col("bkey60"))),
+    companions = writeBandCounts)
 
   /** Materialize the corpus's DISTINCT window hashes as a bucketed
-    * table — the substring analog of [[writeBandIndex]], and smaller
-    * by construction: the scrub probe only needs set membership, so
-    * the index stores one row per distinct hash (no postings, no
-    * counts sidecar, no cap — a boilerplate window repeated 10⁶
-    * times is one row). Bucketed on `h` so a probing batch shuffles
-    * only itself (SubstrIndexSpec pins the single Exchange). */
+    * table — smaller than the band index by construction: the scrub
+    * probe only needs set membership, so the index stores one row per
+    * distinct hash (no postings, no counts sidecar, no cap — a
+    * boilerplate window repeated 10⁶ times is one row). Bucketed on
+    * `h` so a probing batch shuffles only itself (SubstrIndexSpec
+    * pins the single Exchange). */
   def writeSubstrIndexOf(docs: DataFrame, table: String): Unit = {
-    val s = docs.sparkSession
-    prepareManagedOverwrite(s, table)
-    substrWindowRows(docs)
-      .select(col("h")).distinct()
-      // align the write parallelism with the bucket count: repartition
-      // and bucketBy share Murmur3 HashPartitioning, so every task
-      // holds exactly one bucket and the layout lands as ONE file per
-      // bucket at ANY cluster parallelism (an unaligned shuffle count
-      // writes up to tasks x buckets files — invisible at local[32],
-      // where 32 divides 64, but real fragmentation on a cluster)
-      .repartition(BandIndexBuckets, col("h"))
-      .write.mode("overwrite")
-      .bucketBy(BandIndexBuckets, "h").sortBy("h")
-      .saveAsTable(table)
-    stampIndexFormat(s, table)
+    PersistedIndex.writeBucketed(substrWindowRows(docs).select(col("h")).distinct(), "h", table)
+    PersistedIndex.stamp(docs.sparkSession, SubstrIndex, table)
   }
 
   /** Corpus-half (doc_id % 10 ≠ 0) substring index — the fixture's
@@ -1558,72 +1535,26 @@ object Dedup {
 
   /** Append a new corpus segment's distinct window hashes. Appends
     * may re-insert hashes already present — membership semantics are
-    * unaffected (the probe is a semi join) and
-    * [[compactSubstrIndex]] folds duplicates away. Format-checked:
-    * appending v2 hashes into a v1 generation would mix hash spaces
-    * inside one table, the quietest corruption of all. */
-  def appendSubstrIndex(batch: DataFrame, table: String): Unit = {
-    requireIndexFormat(batch.sparkSession, table)
-    substrWindowRows(batch)
-      .select(col("h")).distinct()
-      .repartition(BandIndexBuckets, col("h"))
-      .write.mode("append").insertInto(table)
-  }
+    * unaffected (the probe is a semi join) and compaction folds
+    * duplicates away. Format-checked: appending v2 hashes into a v1
+    * generation would mix hash spaces inside one table, the quietest
+    * corruption of all. */
+  def appendSubstrIndex(batch: DataFrame, table: String): Unit =
+    PersistedIndex.append(batch.sparkSession, SubstrIndex, table,
+      substrWindowRows(batch).select(col("h")).distinct())
 
   /** [[substrScrubIncremental]] against the PERSISTED index: the
     * arriving batch computes its own window stream and semi-joins
     * the bucketed hash table — the corpus side never shuffles.
     * Bit-equal to the inline form (SubstrIndexSpec asserts it). */
   def substrScrubIndexedOf(batch: DataFrame, table: String): DataFrame = {
-    requireIndexFormat(batch.sparkSession, table)
+    PersistedIndex.requireFormat(batch.sparkSession, SubstrIndex, table)
     substrScrubAgainst(batch, batch.sparkSession.table(table))
   }
 
   def substrScrubIndexed(s: SparkSession, dir: String, table: String): DataFrame =
     substrScrubIndexedOf(
       t(s, dir, "documents").filter(col("doc_id") % 10 === 0), table)
-
-  /** Rewrite an appended-to substring index into a fresh generation:
-    * distinct-fold the hash rows into clean bucketed files. A NEW
-    * table, never in place — the generation-swap rule. */
-  def compactSubstrIndex(s: SparkSession, table: String, outTable: String): Unit = {
-    requireIndexFormat(s, table)
-    prepareManagedOverwrite(s, outTable)
-    s.table(table).select(col("h")).distinct()
-      .repartition(BandIndexBuckets, col("h"))
-      .write.mode("overwrite")
-      .bucketBy(BandIndexBuckets, "h").sortBy("h")
-      .saveAsTable(outTable)
-    stampIndexFormat(s, outTable)
-  }
-
-  /** File-growth merge policy for the substring index — the
-    * [[maintainBandIndex]] twin: one metadata-cheap listing; past
-    * `maxFilesPerBucket` average files per bucket the index rewrites
-    * into `outTable`. Returns true when a compaction ran. */
-  def maintainSubstrIndex(
-      s: SparkSession, table: String, outTable: String,
-      maxFilesPerBucket: Int = DefaultMaxFilesPerBucket): Boolean = {
-    val meta = s.sessionState.catalog.getTableMetadata(
-      s.sessionState.sqlParser.parseTableIdentifier(table))
-    val loc = new org.apache.hadoop.fs.Path(meta.location)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    var nFiles = 0L
-    val it = fs.listFiles(loc, /* recursive = */ true)
-    while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(".parquet")) nFiles += 1
-    }
-    if (nFiles == 0) {
-      require(Maintenance.isCommittedEmptyDir(s, loc.toString),
-        s"substring index $table at $loc lists no parquet data files and no " +
-          "_SUCCESS marker — layout changed? refusing to silently skip compaction")
-      return false
-    }
-    if (nFiles > maxFilesPerBucket.toLong * BandIndexBuckets) {
-      compactSubstrIndex(s, table, outTable)
-      true
-    } else false
-  }
 
   // ---- Persisted maximal atom-window index ----
 
@@ -1644,13 +1575,8 @@ object Dedup {
     * membership; the maximal family also needs WHO was first, so
     * the canonical copy of a passage keeps it). */
   def writeMaximalIndexOf(docs: DataFrame, table: String): Unit = {
-    prepareManagedOverwrite(docs.sparkSession, table)
-    maximalFirstRows(docs)
-      .repartition(BandIndexBuckets, col("h"))
-      .write.mode("overwrite")
-      .bucketBy(BandIndexBuckets, "h").sortBy("h")
-      .saveAsTable(table)
-    stampIndexFormat(docs.sparkSession, table)
+    PersistedIndex.writeBucketed(maximalFirstRows(docs), "h", table)
+    PersistedIndex.stamp(docs.sparkSession, MaximalIndex, table)
   }
 
   /** Corpus-half (doc_id % 10 ≠ 0) maximal index — the incremental/
@@ -1662,63 +1588,23 @@ object Dedup {
     * present gains a second row; probes min-fold across segments
     * ([[maximalIndexFirsts]]), so the GLOBAL first is the min of
     * per-segment firsts — append order cannot change an answer.
-    * [[compactMaximalIndex]] folds the duplicates away. */
-  def appendMaximalIndex(batch: DataFrame, table: String): Unit = {
-    requireIndexFormat(batch.sparkSession, table)
-    maximalFirstRows(batch)
-      .repartition(BandIndexBuckets, col("h"))
-      .write.mode("append").insertInto(table)
-  }
+    * Compaction folds the duplicates away. */
+  def appendMaximalIndex(batch: DataFrame, table: String): Unit =
+    PersistedIndex.append(batch.sparkSession, MaximalIndex, table, maximalFirstRows(batch))
 
-  /** Probe-side view of a maximal index: per-hash min across
-    * appended segments. GroupBy on the bucketing key — the fold
-    * never shuffles the index (MaximalIndexSpec pins the single
-    * Exchange, the probe's own). */
-  private[graft] def maximalIndexFirsts(s: SparkSession, table: String): DataFrame = {
-    requireIndexFormat(s, table)
-    s.table(table)
-      .groupBy(col("h"))
+  /** Per-hash min across appended segments of a maximal index's
+    * rows — the probe view and the compaction fold. GroupBy on the
+    * bucketing key, so the fold never shuffles the index
+    * (MaximalIndexSpec pins the single Exchange, the probe's own). */
+  private def foldMaximalFirsts(rows: DataFrame): DataFrame =
+    rows.groupBy(col("h"))
       .agg(min(struct(col("f_doc").as("doc_id"), col("f_pos").as("pos"))).as("f"))
       .select(col("h"), col("f.doc_id").as("f_doc"), col("f.pos").as("f_pos"))
-  }
 
-  /** Rewrite an appended-to maximal index into a fresh generation:
-    * min-fold the per-segment firsts into clean bucketed files. A
-    * NEW table, never in place — the generation-swap rule. */
-  def compactMaximalIndex(s: SparkSession, table: String, outTable: String): Unit = {
-    prepareManagedOverwrite(s, outTable)
-    maximalIndexFirsts(s, table)
-      .repartition(BandIndexBuckets, col("h"))
-      .write.mode("overwrite")
-      .bucketBy(BandIndexBuckets, "h").sortBy("h")
-      .saveAsTable(outTable)
-    stampIndexFormat(s, outTable)
-  }
-
-  /** File-growth merge policy — the [[maintainSubstrIndex]] twin on
-    * the maximal table. */
-  def maintainMaximalIndex(
-      s: SparkSession, table: String, outTable: String,
-      maxFilesPerBucket: Int = DefaultMaxFilesPerBucket): Boolean = {
-    val meta = s.sessionState.catalog.getTableMetadata(
-      s.sessionState.sqlParser.parseTableIdentifier(table))
-    val loc = new org.apache.hadoop.fs.Path(meta.location)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    var nFiles = 0L
-    val it = fs.listFiles(loc, /* recursive = */ true)
-    while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(".parquet")) nFiles += 1
-    }
-    if (nFiles == 0) {
-      require(Maintenance.isCommittedEmptyDir(s, loc.toString),
-        s"maximal index $table at $loc lists no parquet data files and no " +
-          "_SUCCESS marker — layout changed? refusing to silently skip compaction")
-      return false
-    }
-    if (nFiles > maxFilesPerBucket.toLong * BandIndexBuckets) {
-      compactMaximalIndex(s, table, outTable)
-      true
-    } else false
+  /** Probe-side view of a maximal index ([[foldMaximalFirsts]]). */
+  private[graft] def maximalIndexFirsts(s: SparkSession, table: String): DataFrame = {
+    PersistedIndex.requireFormat(s, MaximalIndex, table)
+    foldMaximalFirsts(s.table(table))
   }
 
   /** Session memo of FULL-corpus maximal indexes built by
@@ -1741,8 +1627,10 @@ object Dedup {
   private[graft] def ensureMaximalIndex(s: SparkSession, dir: String): String = {
     val key = OpsShared.dirKey(dir, "documents")
     maximalIdxCache.computeIfAbsent(key, _ => {
+      // 60-bit md5 of the full key, not String.hashCode: two keys
+      // colliding at 32 bits would share one table name
       val table = "graft_mx_idx_" +
-        java.lang.Long.toHexString(java.lang.Integer.toUnsignedLong(key.hashCode))
+        java.lang.Long.toHexString(graft.functions.CrossHash.md5Hash60(key))
       writeMaximalIndexOf(t(s, dir, "documents", resplit = true), table)
       table
     })
@@ -1903,7 +1791,7 @@ object Dedup {
     * the corpus is never re-derived (nor shuffled) per audit.
     * Format-gated like every index consumer. */
   def maximalScrubResidualIndexedOf(batch: DataFrame, table: String): DataFrame = {
-    requireIndexFormat(batch.sparkSession, table)
+    PersistedIndex.requireFormat(batch.sparkSession, MaximalIndex, table)
     // DISTINCT because appended (uncompacted) generations re-insert
     // hashes — a duplicate h must not double-count hits; on the
     // bucketed table the distinct is bucket-local, no exchange
@@ -1974,13 +1862,13 @@ object Dedup {
   }
 
   /** Variable-length scrub of an ARRIVING batch (doc_id % 10 = 0)
-    * against the persisted corpus-half index — the maximal twin of
-    * [[substrScrubIndexed]]: same probe as the inline form but the
-    * corpus side is the bucketed table, so it never shuffles
+    * against the persisted corpus-half index: same probe as the
+    * inline form but the corpus side is the bucketed table, so it
+    * never shuffles
     * (MaximalIndexSpec pins the single Exchange and indexed ≡
     * inline). */
   def maximalScrubIndexedOf(batch: DataFrame, table: String): DataFrame = {
-    requireIndexFormat(batch.sparkSession, table)
+    PersistedIndex.requireFormat(batch.sparkSession, MaximalIndex, table)
     maximalScrubAgainst(batch, batch.sparkSession.table(table))
   }
 
@@ -3096,18 +2984,6 @@ object Dedup {
     rows.withColumn("bucket_n",
       count(lit(1)).over(Window.partitionBy(trueBandKeyCols: _*)))
 
-  /** Materialize the corpus's MinHash band rows as a BUCKETED table —
-    * the missing half of [[dedupIncremental]]'s at-scale story: with
-    * the corpus band table bucketed by the band key ON DISK, an
-    * arriving batch shuffles only ITSELF; the 100 TB corpus side
-    * reads its buckets in place (zero corpus shuffle, the Exchange
-    * provably absent — BandIndexSpec pins it). `bucket_n` is counted
-    * at write time so the hot-bucket cap is a stored-column filter at
-    * query time, not a window over the corpus. The ANN analog is
-    * [[graft.ops.GraphAnn.writeGraphIndex]]; continuous ingest
-    * appends via [[appendBandIndex]], and the `_counts` sidecar
-    * gives probes GLOBAL cap semantics across segments (the
-    * maintainGraphIndex generation pattern handles file growth). */
   /** Per-(TRUE band key) row counts of one segment — the sidecar
     * unit every writer persists to `<table>_counts` so a probe can
     * reconstruct GLOBAL bucket sizes across segments with one cheap
@@ -3121,23 +2997,33 @@ object Dedup {
       .groupBy(col("band"), col("key"))
       .agg(count(lit(1)).as("n"))
 
-  def writeBandIndexOf(corpus: DataFrame, table: String): Unit = {
-    val s = corpus.sparkSession
-    prepareManagedOverwrite(s, table)
-    prepareManagedOverwrite(s, table + "_counts")
-    withBucketN(bandRows(corpus))
-      .repartition(BandIndexBuckets, col("bkey60"))
-      .write.mode("overwrite")
-      .bucketBy(BandIndexBuckets, "bkey60").sortBy("bkey60")
-      .saveAsTable(table)
-    // sidecar from the rows JUST WRITTEN (they carry sig + band):
-    // counting the persisted relation costs one index-table scan,
-    // where re-deriving bandRows(corpus) would re-run the md5
-    // shingle + minhash passes over the whole corpus a second time —
-    // at 100 TB the signature pass IS the build cost
+  /** The `_counts` sidecar of a freshly written band generation, one
+    * row per bucket, counted from the rows JUST WRITTEN (they carry
+    * sig + band): one index-table scan, where re-deriving the band
+    * rows would re-run the md5 shingle + minhash passes over the
+    * whole corpus a second time — at 100 TB the signature pass IS the
+    * build cost. */
+  private def writeBandCounts(s: SparkSession, table: String): Unit = {
+    PersistedIndex.prepareManagedOverwrite(s, table + "_counts")
     bandBucketCounts(s.table(table))
       .write.mode("overwrite").saveAsTable(table + "_counts")
-    stampIndexFormat(s, table)
+  }
+
+  /** Materialize the corpus's MinHash band rows as a BUCKETED table —
+    * the missing half of [[dedupIncremental]]'s at-scale story: with
+    * the corpus band table bucketed by the band key ON DISK, an
+    * arriving batch shuffles only ITSELF; the 100 TB corpus side
+    * reads its buckets in place (zero corpus shuffle, the Exchange
+    * provably absent — BandIndexSpec pins it). `bucket_n` is counted
+    * at write time so the hot-bucket cap is a stored-column filter at
+    * query time, not a window over the corpus. Continuous ingest
+    * appends via [[appendBandIndex]], and the `_counts` sidecar
+    * gives probes GLOBAL cap semantics across segments. */
+  def writeBandIndexOf(corpus: DataFrame, table: String): Unit = {
+    val s = corpus.sparkSession
+    PersistedIndex.writeBucketed(withBucketN(bandRows(corpus)), "bkey60", table)
+    writeBandCounts(s, table)
+    PersistedIndex.stamp(s, BandIndex, table)
   }
 
   /** Corpus-half (doc_id % 10 ≠ 0) band index — the fixture's
@@ -3155,7 +3041,6 @@ object Dedup {
     * is suppressed exactly like the inline detector's global window
     * (the formerly-documented cross-segment undercount is gone). */
   def appendBandIndex(batch: DataFrame, table: String): Unit = {
-    requireIndexFormat(batch.sparkSession, table)
     // one signature pass serves both writes: the posting rows and
     // the segment's sidecar counts (an arriving segment is ≪ the
     // corpus, so materializing its band rows is cheap; re-deriving
@@ -3163,9 +3048,7 @@ object Dedup {
     val rows = bandRows(batch)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      withBucketN(rows)
-        .repartition(BandIndexBuckets, col("bkey60"))
-        .write.mode("append").insertInto(table)
+      PersistedIndex.append(batch.sparkSession, BandIndex, table, withBucketN(rows))
       bandBucketCounts(rows)
         .write.mode("append").insertInto(table + "_counts")
     } finally rows.unpersist()
@@ -3182,7 +3065,7 @@ object Dedup {
     * the dir-based wrapper below, the `Against` convention). */
   def dedupIncrementalIndexedOf(batch: DataFrame, table: String): DataFrame = {
     val s = batch.sparkSession
-    requireIndexFormat(s, table)
+    PersistedIndex.requireFormat(s, BandIndex, table)
     val inc = bandRows(batch)
       .select(col("bkey60"), col("doc_id").as("doc_new"), col("sig").as("sig_new"))
     // GLOBAL hot-bucket cap from the `_counts` sidecar: per-segment
@@ -3199,7 +3082,7 @@ object Dedup {
     // table; probing falls back to the stored per-row `bucket_n`
     // filter (the previous contract — exact per segment, with the
     // documented cross-segment undercount) instead of failing with
-    // table-not-found. A compaction ([[compactBandIndex]]) upgrades
+    // table-not-found. A compaction upgrades
     // such an index to the sidecar contract.
     val capped =
       if (!s.catalog.tableExists(table + "_counts")) {
@@ -3239,81 +3122,12 @@ object Dedup {
     dedupIncrementalIndexedOf(
       t(s, dir, "documents").filter(col("doc_id") % 10 === 0), table)
 
-  /** Rewrite an appended-to band index into a fresh generation at
-    * `outTable`: one pass over the persisted rows recomputing GLOBAL
-    * `bucket_n` (appends count per segment — see [[appendBandIndex]])
-    * and re-bucketing into clean files. A NEW table, never in place —
-    * the [[graft.ops.GraphAnn.compactGraphIndex]] generation-swap
-    * rule: the old generation stays queryable until the caller flips
-    * its pointer. No text is re-hashed — the band rows already carry
-    * everything. */
-  def compactBandIndex(s: SparkSession, table: String, outTable: String): Unit = {
-    requireIndexFormat(s, table)
-    prepareManagedOverwrite(s, outTable)
-    prepareManagedOverwrite(s, outTable + "_counts")
-    withBucketN(s.table(table)
-        .select(col("doc_id"), col("sig"), col("band"), col("bkey60")))
-      .repartition(BandIndexBuckets, col("bkey60"))
-      .write.mode("overwrite")
-      .bucketBy(BandIndexBuckets, "bkey60").sortBy("bkey60")
-      .saveAsTable(outTable)
-    // fold the per-segment counts sidecar into one row per bucket
-    bandBucketCounts(s.table(outTable)
-        .select(col("doc_id"), col("sig"), col("band"), col("bkey60")))
-      .write.mode("overwrite").saveAsTable(outTable + "_counts")
-    stampIndexFormat(s, outTable)
-  }
-
   /** Broadcast gate for the oversized-bucket anti join in
     * [[dedupIncrementalIndexed]] — hot buckets are few by definition
     * (each represents > [[MaxPosting]] posting rows), but the set is
     * data-dependent, so it only carries a hint when counted small
     * (the batch-ANN BatchBroadcastCap rule). */
   val OversizedBroadcastCap = 65536L
-
-  /** Files per bucket before compaction triggers: every append adds
-    * one file per bucket it touches, and probe cost grows with the
-    * per-bucket file count (each is opened and merge-read). */
-  val DefaultMaxFilesPerBucket = 16
-
-  /** The band-index merge policy — [[appendBandIndex]] grows file
-    * segments without bound; THIS decides when to fold them (the
-    * [[graft.ops.GraphAnn.maintainGraphIndex]] analog): ONE
-    * metadata-cheap file listing of the table location, and past
-    * `maxFilesPerBucket` average files per bucket the index rewrites
-    * into `outTable` via [[compactBandIndex]]. Returns true when a
-    * compaction ran — the caller swaps its pointer and retires the
-    * old generation. */
-  def maintainBandIndex(
-      s: SparkSession, table: String, outTable: String,
-      maxFilesPerBucket: Int = DefaultMaxFilesPerBucket): Boolean = {
-    // resolve the table location through the catalog API — string-
-    // parsing DESCRIBE EXTENDED output breaks silently across
-    // metastore formats, and a silent mis-parse here would disable
-    // compaction forever rather than fail loudly
-    val meta = s.sessionState.catalog.getTableMetadata(
-      s.sessionState.sqlParser.parseTableIdentifier(table))
-    val loc = new org.apache.hadoop.fs.Path(meta.location)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    var nFiles = 0L
-    val it = fs.listFiles(loc, /* recursive = */ true)
-    while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(".parquet")) nFiles += 1
-    }
-    if (nFiles == 0) {
-      // a zero-row bucketed saveAsTable commits _SUCCESS at the table
-      // location with no data files — a VALID empty index → no-op;
-      // anything else (missing dir, relocated layout) fails loudly
-      require(Maintenance.isCommittedEmptyDir(s, loc.toString),
-        s"band index $table at $loc lists no parquet data files and no " +
-          "_SUCCESS marker — layout changed? refusing to silently skip compaction")
-      return false
-    }
-    if (nFiles > maxFilesPerBucket.toLong * BandIndexBuckets) {
-      compactBandIndex(s, table, outTable)
-      true
-    } else false
-  }
 
   /** Band counts the sweep evaluates (NumHashes = 64 fixed, so
     * rows-per-band = 64/b): more bands → looser match requirement →

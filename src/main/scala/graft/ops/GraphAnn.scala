@@ -392,6 +392,20 @@ object GraphAnn {
       .toDF("shard", "vec_id", "label", "embedding", "neighbors")
   }
 
+  /** The graph index: `shard=N` segments at the root. Compaction
+    * re-shards ALL vectors with [[shardsFor]] and rebuilds their
+    * graphs — the Lucene segment merge. */
+  val GraphIndex: PersistedIndex.Family =
+    PersistedIndex.Family("graph", PersistedIndex.Segments, fold = reshard)
+
+  private def reshard(rows: DataFrame): DataFrame = {
+    import rows.sparkSession.implicits._
+    val all = rows
+      .select(col("vec_id"), col("label").cast("int"), col("embedding").cast("array<float>"))
+      .as[(Long, Int, Seq[Float])]
+    graphIndexRows(all, shardsFor(all.count()), shardBase = 0)
+  }
+
   def writeGraphIndex(
       s: SparkSession, dir: String, indexPath: String,
       shards: Option[Int] = None): Unit = {
@@ -403,6 +417,7 @@ object GraphAnn {
       .as[(Long, Int, Seq[Float])]
     graphIndexRows(sel, nShards, shardBase = 0)
       .write.mode("overwrite").partitionBy("shard").parquet(indexPath)
+    PersistedIndex.stamp(s, GraphIndex, indexPath)
   }
 
   /** Append a batch of new vectors into an EXISTING materialized graph
@@ -414,7 +429,7 @@ object GraphAnn {
     * incrementally, `index.py:432-449`); this is its bulk-parallel
     * form. Continuous ingest = this per micro-batch (see
     * [[graft.streaming.StreamingIndex.annAppendStream]]), with
-    * [[compactGraphIndex]] as the periodic merge once small segments
+    * [[PersistedIndex.maintain]] merging once small segments
     * accumulate. Caller contract: batch vec_ids are new (an upsert
     * dedups before appending). */
   /** Start of the tag-keyed segment-id space: batch tag t owns shard
@@ -440,12 +455,13 @@ object GraphAnn {
     * [[graft.streaming.StreamingIndex.annAppendStream]] delivery
     * becomes effectively exactly-once for this index. The tag space
     * holds ~214k batches before the int shard range runs out —
-    * [[maintainGraphIndex]] compacts (collapsing all segments back to
-    * the dense range) orders of magnitude sooner on any real stream. */
+    * compaction (collapsing all segments back to the dense range)
+    * runs orders of magnitude sooner on any real stream. */
   def appendGraphIndex(
       s: SparkSession, indexPath: String, batch: DataFrame,
       segmentTag: Option[Long] = None): Unit = {
     import s.implicits._
+    PersistedIndex.requireFormat(s, GraphIndex, indexPath)
     val sel = batch
       .filter(col("vec_id") =!= VectorQueries.QueryVecId)
       .select(col("vec_id"), col("label").cast("int"),
@@ -461,8 +477,8 @@ object GraphAnn {
           val base = s.read.parquet(indexPath)
             .filter(col("shard").cast("int") < SegTagBase)
             .agg(coalesce(max(col("shard").cast("int")), lit(-1))).head().getInt(0) + 1
-          graphIndexRows(sel, segShards, shardBase = base)
-            .write.mode("append").partitionBy("shard").parquet(indexPath)
+          PersistedIndex.append(s, GraphIndex, indexPath,
+            graphIndexRows(sel, segShards, shardBase = base))
         case Some(tag) =>
           require(tag >= 0 && tag <= (Int.MaxValue - SegTagBase).toLong / SegTagSpan,
             s"segment tag $tag outside the id space — compact the index first")
@@ -480,61 +496,6 @@ object GraphAnn {
     }
   }
 
-  /** Merge an appended-to index into a fresh generation at `outPath`:
-    * re-shard ALL vectors with [[shardsFor]] and rebuild — the Lucene
-    * segment-merge half of the maintenance story. Writes to a NEW
-    * path (generation swap by pointer) rather than in place, because
-    * overwriting an input mid-read is illegal and at 100 TB the old
-    * generation must stay queryable until the new one is complete. */
-  def compactGraphIndex(s: SparkSession, indexPath: String, outPath: String): Unit = {
-    import s.implicits._
-    val all = s.read.parquet(indexPath)
-      .select(col("vec_id"), col("label").cast("int"),
-        col("embedding").cast("array<float>"))
-      .as[(Long, Int, Seq[Float])]
-    graphIndexRows(all, shardsFor(all.count()), shardBase = 0)
-      .write.mode("overwrite").partitionBy("shard").parquet(outPath)
-  }
-
-  /** Segment shards currently in the index — ONE file-status listing
-    * of the `shard=N/` partition dirs (metadata-cheap on any Hadoop
-    * filesystem; no data is read), so the merge-policy check costs
-    * nothing even at 100 TB. */
-  private[graft] def segmentCount(s: SparkSession, indexPath: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).count(st => st.isDirectory && st.getPath.getName.startsWith("shard="))
-  }
-
-  /** Default compaction threshold. Search cost is linear in segment
-    * count (every shard's graph answers every query — the Lucene
-    * many-small-segments tax), so the policy bounds it: steady small
-    * appends accumulate up to this many segments before one merge
-    * re-shards everything back to [[shardsFor]]'s derived count. */
-  val DefaultMaxSegments = 64
-
-  /** The merge-policy half of the maintenance story — [[appendGraphIndex]]
-    * grows segments without bound; THIS decides when to merge (the
-    * Lucene `MergePolicy` analog, one knob): count the current
-    * segment shards (cheap listing) and, past `maxSegments`, run
-    * [[compactGraphIndex]] into `outPath` as a fresh generation.
-    * Returns true when a compaction ran — the caller (the periodic
-    * maintenance job; see [[graft.streaming.StreamingIndex.annAppendStream]])
-    * then swaps its live pointer to `outPath` and retires the old
-    * generation once in-flight queries drain. The swap is BY POINTER,
-    * never in place: overwriting an input mid-read is illegal, and at
-    * 100 TB the old generation must stay queryable until the new one
-    * is complete. */
-  def maintainGraphIndex(
-      s: SparkSession, indexPath: String, outPath: String,
-      maxSegments: Int = DefaultMaxSegments): Boolean = {
-    val nSeg = segmentCount(s, indexPath)
-    if (nSeg > maxSegments) {
-      compactGraphIndex(s, indexPath, outPath)
-      true
-    } else false
-  }
-
   /** Query a materialized graph index: NO construction — each task
     * reassembles its shards' adjacency from the persisted rows and
     * runs the same beam search, then the global exact-rescored merge.
@@ -544,6 +505,7 @@ object GraphAnn {
   def graphSearchIndexed(
       s: SparkSession, indexPath: String, qVec: Array[Float], k: Int = 5): DataFrame = {
     import s.implicits._
+    PersistedIndex.requireFormat(s, GraphIndex, indexPath)
     val kk = k
     val candidates = s.read.parquet(indexPath)
       .select(col("vec_id"), col("label"), col("embedding").cast("array<float>"),

@@ -279,16 +279,31 @@ object KMeansVec {
       iters: Int = 1,
       trainDir: Option[String] = None): Array[Array[Double]] = {
     val centroids = fit(s, trainDir.getOrElse(dir), k, iters)._1
-    t(s, dir, "embeddings")
-      // the query sentinel row is not corpus (the writeGraphIndex /
-      // writePqIndex convention): persisting it would make an indexed
-      // search over its own corpus return the query itself
-      .filter(col("vec_id") =!= VectorQueries.QueryVecId)
-      .withColumn("cluster", assignUdf(centroids)(col("embedding")))
-      .select(col("vec_id"), col("embedding"), col("label"),
-        col("cluster").cast("int").as("cluster"))
+    ivfRows(t(s, dir, "embeddings"), centroids)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("cluster").parquet(s"$outDir/vectors")
+    writeCentroids(s, centroids, outDir)
+    PersistedIndex.stamp(s, IvfIndex, outDir)
+    centroids
+  }
+
+  /** Vector rows (vec_id, embedding, label, cluster) of `vecs`
+    * assigned against `centroids` — one derivation for the build and
+    * every append, so an append lands each row in exactly the cell a
+    * bulk build would. The query sentinel row is not corpus:
+    * persisting it would make an indexed search over its own corpus
+    * return the query itself. */
+  private def ivfRows(vecs: DataFrame, centroids: Array[Array[Double]]): DataFrame =
+    vecs
+      .filter(col("vec_id") =!= VectorQueries.QueryVecId)
+      .select(col("vec_id"),
+        col("embedding").cast("array<float>").as("embedding"),
+        col("label").cast("int").as("label"))
+      .withColumn("cluster", assignUdf(centroids)(col("embedding")).cast("int"))
+
+  /** The centroid sidecar, one JSON row per cell. */
+  private[ops] def writeCentroids(
+      s: SparkSession, centroids: Array[Array[Double]], outDir: String): Unit = {
     import s.implicits._
     centroids.zipWithIndex
       .map { case (c, i) => (i, c.toSeq) }.toSeq
@@ -296,7 +311,6 @@ object KMeansVec {
       .coalesce(1)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .json(s"$outDir/centroids")
-    centroids
   }
 
   /** Persisted centroids back from the sidecar, cluster-ordered. */
@@ -307,6 +321,11 @@ object KMeansVec {
         r.getAs[scala.collection.Seq[Double]]("centroid").toArray))
       .sortBy(_._1).map(_._2)
 
+  /** The IVF index: `cluster=`-partitioned `vectors` plus the frozen
+    * centroid sidecar. */
+  val IvfIndex: PersistedIndex.Family =
+    PersistedIndex.Family("ivf", PersistedIndex.Cells("vectors"), sidecars = Seq("centroids"))
+
   /** Append a batch of new vectors into an EXISTING materialized IVF
     * index: assign against the FROZEN centroids from the sidecar (no
     * refit — the FAISS `add` contract) and land the rows as new files
@@ -314,86 +333,13 @@ object KMeansVec {
     * k·dim sidecar, never the existing vectors, and partition pruning
     * keeps working because appends land in the same cell layout.
     * Centroid drift under a shifting distribution is the periodic
-    * retrain+rewrite ([[writeIvfIndex]] to a fresh generation), same
-    * as [[GraphAnn.compactGraphIndex]].
-    *
-    * `dedupeExisting = false` (default): caller contract is that
-    * batch vec_ids are new — an at-least-once replay duplicates rows.
-    * `dedupeExisting = true`: anti-join against the existing rows of
-    * the batch's OWN cells first (a replayed row's prior copy lives
-    * in the same cell under the frozen centroids, so `cluster IN`
-    * partition pruning bounds the scan) — appends become idempotent
-    * at the row level. */
+    * retrain+rewrite ([[writeIvfIndex]] to a fresh generation).
+    * `dedupeExisting`: see [[PersistedIndex.append]]. */
   def appendIvfIndex(
       s: SparkSession, indexDir: String, batch: DataFrame,
-      dedupeExisting: Boolean = false): Unit = {
-    val centroids = readCentroids(s, indexDir)
-    val rows = batch
-      .filter(col("vec_id") =!= VectorQueries.QueryVecId)
-      .select(col("vec_id"),
-        col("embedding").cast("array<float>").as("embedding"),
-        col("label").cast("int").as("label"))
-      .withColumn("cluster", assignUdf(centroids)(col("embedding")).cast("int"))
-    val out =
-      if (dedupeExisting) {
-        val cells = rows.select(col("cluster")).distinct()
-          .collect().map(_.getInt(0)).toSeq // bounded by K
-        rows.join(
-          s.read.parquet(s"$indexDir/vectors")
-            .filter(col("cluster").isin(cells: _*)).select(col("vec_id")),
-          Seq("vec_id"), "left_anti")
-      } else rows
-    out.write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy("cluster").parquet(s"$indexDir/vectors")
-  }
-
-  /** Files per cell before [[maintainIvfIndex]] compacts: every
-    * append adds ≥1 file to each cell it touches, and probe cost
-    * grows with the per-cell file count (each probed cell's files
-    * are opened and merge-read). */
-  val DefaultMaxFilesPerCell = 16
-
-  /** Fold an appended-to IVF index's accumulated small files into a
-    * fresh generation at `outDir`: one pass re-bucketing the vector
-    * rows into one file per cell; the centroid sidecar is copied
-    * BYTE-VERBATIM (the quantizer stays frozen — compaction is file
-    * maintenance, never a retrain; drift is [[writeIvfIndex]] to a
-    * new generation). A NEW directory, never in place — the
-    * [[GraphAnn.compactGraphIndex]] generation-swap rule. */
-  def compactIvfIndex(s: SparkSession, indexDir: String, outDir: String): Unit = {
-    s.read.parquet(s"$indexDir/vectors")
-      .repartition(col("cluster"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cluster").parquet(s"$outDir/vectors")
-    Maintenance.copySidecar(s, s"$indexDir/centroids", s"$outDir/centroids")
-  }
-
-  /** The IVF merge policy — [[appendIvfIndex]] grows per-cell file
-    * segments without bound; THIS decides when to fold them (the
-    * [[GraphAnn.maintainGraphIndex]] / [[Dedup.maintainBandIndex]]
-    * analog): one metadata-cheap per-cell listing, and past
-    * `maxFilesPerCell` average files per cell the index rewrites into
-    * `outDir` via [[compactIvfIndex]]. Returns true when a compaction
-    * ran — the caller swaps its pointer and retires the old
-    * generation. */
-  def maintainIvfIndex(
-      s: SparkSession, indexDir: String, outDir: String,
-      maxFilesPerCell: Int = DefaultMaxFilesPerCell): Boolean = {
-    val (files, cells) =
-      Maintenance.partitionedFileStats(s, s"$indexDir/vectors", "cluster")
-    if (cells == 0) {
-      // a zero-row partitioned write commits _SUCCESS but no cluster=
-      // dirs — a VALID empty index → no-op; otherwise fail loudly
-      require(Maintenance.isCommittedEmptyDir(s, s"$indexDir/vectors"),
-        s"IVF index $indexDir/vectors lists no cluster= cells and no " +
-          "_SUCCESS marker — layout changed? refusing to silently skip compaction")
-      return false
-    }
-    if (files > maxFilesPerCell.toLong * cells) {
-      compactIvfIndex(s, indexDir, outDir)
-      true
-    } else false
-  }
+      dedupeExisting: Boolean = false): Unit =
+    PersistedIndex.append(s, IvfIndex, indexDir,
+      ivfRows(batch, readCentroids(s, indexDir)), dedupeExisting)
 
   /** Probe search over a materialized IVF index: rank the persisted
     * centroids against the query on the driver (k rows), then scan
@@ -407,6 +353,7 @@ object KMeansVec {
       k: Int = 5,
       nProbe: Int = 3): DataFrame = {
     import graft.functions.VectorFunctions.{cosineDist, r6}
+    PersistedIndex.requireFormat(s, IvfIndex, indexDir)
     val centroids = readCentroids(s, indexDir)
     val probes = centroids.zipWithIndex
       .map { case (c, i) => (OpsShared.cosineDistTo(q, c), i) }

@@ -41,10 +41,10 @@ object Maintenance {
   }
 
   /** Recursive parquet data-file count of a directory tree —
-    * metadata-only listing, the merge-policy primitive shared by the
-    * index maintenance policies ([[graft.ops.GraphAnn.maintainGraphIndex]]
-    * pattern). Fails loudly on a missing dir rather than returning 0
-    * (a 0 would silently disable compaction forever). */
+    * metadata-only listing, the merge-policy primitive of
+    * [[PersistedIndex.maintain]]. Fails loudly on a missing dir rather
+    * than returning 0 (a 0 would silently disable compaction
+    * forever). */
   def parquetFileCount(spark: SparkSession, dir: String): Long = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -56,25 +56,10 @@ object Maintenance {
     n
   }
 
-  /** True when `dir` exists and carries a committed Spark write's
-    * `_SUCCESS` marker — the layout is real, so ZERO data files means
-    * a legitimately EMPTY dataset (zero-row write: bucketed and
-    * partitioned writers emit no data files for no rows, only the
-    * marker). The merge policies use this to distinguish "valid index
-    * with nothing in it" (maintenance is a no-op, return false) from
-    * "directory missing / layout changed" (require-fail loudly — a
-    * silent 0 would disable compaction forever). */
-  def isCommittedEmptyDir(spark: SparkSession, dir: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(path) &&
-      fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS"))
-  }
-
   /** (data files, partition dirs) of a Hive-partitioned dataset whose
     * partition dirs start with `prefix=` — one listing per cell dir,
     * no data read. The per-cell merge-policy primitive for the
-    * cell-partitioned indexes (IVF, IVF-PQ). */
+    * cell-partitioned indexes ([[PersistedIndex.Cells]]). */
   def partitionedFileStats(
       spark: SparkSession, dir: String, prefix: String): (Long, Long) = {
     val path = new org.apache.hadoop.fs.Path(dir)
@@ -107,11 +92,12 @@ object Maintenance {
 
   // ---- generation retention ----
   //
-  // Every compact*/maintain* policy swaps to a FRESH generation by
-  // pointer (the old one stays queryable until the swap — illegal to
-  // overwrite an input mid-read), but nothing ever deleted superseded
-  // generations: a continuous-ingest deployment leaks one full index
-  // copy per compaction without a retention primitive.
+  // Every compaction (PersistedIndex.compact) swaps to a FRESH
+  // generation by pointer (the old one stays queryable until the swap
+  // — illegal to overwrite an input mid-read), but nothing ever
+  // deleted superseded generations: a continuous-ingest deployment
+  // leaks one full index copy per compaction without a retention
+  // primitive.
 
   /** Delete superseded index-generation DIRECTORIES, keeping the
     * newest `keep` (≥ 1). `generations` is the caller's pointer

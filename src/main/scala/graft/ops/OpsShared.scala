@@ -18,13 +18,17 @@ object OpsShared {
     val root = new java.io.File(s"$dir/$table.parquet")
     val fp =
       if (!root.exists()) "remote"
-      else {
-        val files = Option(root.listFiles()).map(_.sortBy(_.getName)).getOrElse(Array(root))
-        files.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-          .mkString("|").hashCode.toString
-      }
+      else filesFingerprint(Option(root.listFiles()).getOrElse(Array(root)).toSeq)
     s"$dir#$fp"
   }
+
+  /** `name:length:mtime` of each file, name-sorted — the cheap change
+    * fingerprint behind every file-keyed memo. The FULL string is the
+    * key: a 32-bit hash of it collides whenever a rewrite swaps
+    * equal-hash names (`Aa.parquet` ↔ `BB.parquet` at the same size
+    * and mtime), and the memo would serve a stale fit. */
+  def filesFingerprint(files: Seq[java.io.File]): String =
+    files.sortBy(_.getName).map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString("|")
 
   /** The 1-row query-vector lookup every ANN query starts with:
     * `Some(vector)` when the [[VectorQueries.QueryVecId]] row exists

@@ -426,8 +426,8 @@ object Pq {
     * vec_id/label (ARRAY<TINYINT> — 8 bytes vs 256 for the float
     * column), plus the trained codebooks as a tiny sidecar table.
     * At 100 TB the ADC phase scans ONLY this table; floats surface
-    * for the [[Shortlist]]-row rescore — the [[Quantize.writeSqIndex]]
-    * split, at 32× instead of 4× compression. */
+    * for the [[Shortlist]]-row rescore — 32× compression where the
+    * int8 index ([[Quantize.writeSqIndex]]) gives 4×. */
   /** `trainDir` decouples WHERE codebooks are trained from WHAT is
     * encoded — the production shape at scale: train on a stable
     * representative sample, encode the whole corpus (and later
@@ -435,20 +435,37 @@ object Pq {
   def writePqIndex(
       s: SparkSession, dir: String, outDir: String,
       trainDir: Option[String] = None): Unit = {
-    import s.implicits._
     val cb = trainedCodebooks(s, trainDir.getOrElse(dir))
-    val enc = encodeUdf(cb)
-    t(s, dir, "embeddings")
-      // the query sentinel row is not corpus: persisting it would make
-      // an indexed search over its own corpus return the query itself
-      // as the top hit (the writeGraphIndex convention)
-      .filter(col("vec_id") =!= VectorQueries.QueryVecId)
-      .filter(graft.functions.VectorFunctions.l2norm(col("embedding")) > 0)
-      .withColumn("c", enc(col("embedding")).getField("_1"))
-      .select(col("vec_id"), col("label"),
-        expr("transform(c, x -> CAST(x AS TINYINT))").as("codes"))
+    pqRows(t(s, dir, "embeddings"), cb)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$outDir/codes")
+    writeCodebooks(s, cb, outDir)
+    PersistedIndex.stamp(s, PqIndex, outDir)
+  }
+
+  /** Code rows (vec_id, label, codes[, cluster]) of `vecs` under the
+    * codebooks `cb` (and, for IVF-PQ, the coarse `centroids`) — one
+    * derivation for the build and every append, so an append encodes
+    * exactly as a bulk build would. The query sentinel row is not
+    * corpus: persisting it would make an indexed search over its own
+    * corpus return the query itself as the top hit. */
+  private def pqRows(
+      vecs: DataFrame, cb: Array[Array[Array[Double]]],
+      centroids: Option[Array[Array[Double]]] = None): DataFrame = {
+    val enc = encodeUdf(cb)
+    val emb = col("embedding").cast("array<float>")
+    vecs
+      .filter(col("vec_id") =!= VectorQueries.QueryVecId)
+      .filter(graft.functions.VectorFunctions.l2norm(col("embedding")) > 0)
+      .withColumn("c", enc(emb).getField("_1"))
+      .select(Seq(col("vec_id"), col("label").cast("int").as("label"),
+          expr("transform(c, x -> CAST(x AS TINYINT))").as("codes")) ++
+        centroids.map(c => KMeansVec.assignUdf(c)(emb).cast("int").as("cluster")): _*)
+  }
+
+  private def writeCodebooks(
+      s: SparkSession, cb: Array[Array[Array[Double]]], outDir: String): Unit = {
+    import s.implicits._
     cb.zipWithIndex.flatMap { case (book, sp) =>
       book.zipWithIndex.map { case (c, code) => (sp, code, c.toSeq) }
     }.toSeq.toDF("s", "code", "emb")
@@ -457,80 +474,23 @@ object Pq {
       .parquet(s"$outDir/codebooks")
   }
 
+  /** The PQ index: a flat `codes` table plus the frozen codebook
+    * sidecar. */
+  val PqIndex: PersistedIndex.Family =
+    PersistedIndex.Family("pq", PersistedIndex.Flat("codes"), sidecars = Seq("codebooks"))
+
   /** Append a batch of new vectors into an EXISTING materialized PQ
     * index: encode with the FROZEN codebooks from the sidecar (no
     * retraining — the FAISS `add` contract) and append the TINYINT
     * code rows. Map-only: reads the tiny sidecar, never the existing
     * codes. Codebook drift under a shifting distribution is handled
-    * by periodic retrain+rewrite ([[writePqIndex]]), the same
-    * generation swap as [[GraphAnn.compactGraphIndex]].
-    *
-    * `dedupeExisting = false` (default): caller contract is that
-    * batch vec_ids are new — an at-least-once replay duplicates rows.
-    * `dedupeExisting = true`: anti-join the batch against the
-    * existing index's vec_id column first, making the append
-    * idempotent at the row level (a replayed or partially-applied
-    * batch converges instead of duplicating). Cost: one slim
-    * vec_id-column scan of the codes table — the price of replay
-    * safety on a flat layout; the IVF variants prune that scan to the
-    * batch's own cells. */
+    * by periodic retrain+rewrite ([[writePqIndex]]) to a fresh
+    * generation. `dedupeExisting`: see [[PersistedIndex.append]]. */
   def appendPqIndex(
       s: SparkSession, indexDir: String, batch: DataFrame,
-      dedupeExisting: Boolean = false): Unit = {
-    val cb = readCodebooks(s, indexDir)
-    val enc = encodeUdf(cb)
-    val rows = batch
-      .filter(col("vec_id") =!= VectorQueries.QueryVecId)
-      .filter(graft.functions.VectorFunctions.l2norm(col("embedding")) > 0)
-      .withColumn("c", enc(col("embedding").cast("array<float>")).getField("_1"))
-      .select(col("vec_id"), col("label").cast("int").as("label"),
-        expr("transform(c, x -> CAST(x AS TINYINT))").as("codes"))
-    val out =
-      if (dedupeExisting)
-        rows.join(s.read.parquet(s"$indexDir/codes").select(col("vec_id")),
-          Seq("vec_id"), "left_anti")
-      else rows
-    out.write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$indexDir/codes")
-  }
-
-  /** Flat-table file count before [[maintainPqIndex]] compacts —
-    * the whole codes table is scanned by every ADC phase, so the tax
-    * of accumulated append files is per-query. */
-  val DefaultMaxIndexFiles = 64
-
-  /** Fold an appended-to PQ index's accumulated small files into a
-    * fresh generation at `outDir`: the codes table rewrites through
-    * [[Maintenance.compactParquet]] (size-derived file count); the
-    * codebook sidecar is copied BYTE-VERBATIM (frozen quantizer —
-    * compaction is file maintenance, never a retrain). Generation
-    * swap by pointer, never in place. */
-  def compactPqIndex(s: SparkSession, indexDir: String, outDir: String): Unit = {
-    Maintenance.compactParquet(s, s"$indexDir/codes", s"$outDir/codes")
-    Maintenance.copySidecar(s, s"$indexDir/codebooks", s"$outDir/codebooks")
-  }
-
-  /** The PQ merge policy ([[graft.ops.GraphAnn.maintainGraphIndex]]
-    * analog): one metadata-cheap file count of the flat codes table;
-    * past `maxFiles` the index rewrites into `outDir` via
-    * [[compactPqIndex]]. Returns true when a compaction ran. */
-  def maintainPqIndex(
-      s: SparkSession, indexDir: String, outDir: String,
-      maxFiles: Int = DefaultMaxIndexFiles): Boolean = {
-    val files = Maintenance.parquetFileCount(s, s"$indexDir/codes")
-    if (files == 0) {
-      // a zero-row committed write is a VALID empty index → no-op;
-      // anything else (missing dir, relocated layout) fails loudly
-      require(Maintenance.isCommittedEmptyDir(s, s"$indexDir/codes"),
-        s"PQ index $indexDir/codes lists no parquet data files and no " +
-          "_SUCCESS marker — layout changed? refusing to silently skip compaction")
-      return false
-    }
-    if (files > maxFiles) {
-      compactPqIndex(s, indexDir, outDir)
-      true
-    } else false
-  }
+      dedupeExisting: Boolean = false): Unit =
+    PersistedIndex.append(s, PqIndex, indexDir,
+      pqRows(batch, readCodebooks(s, indexDir)), dedupeExisting)
 
   /** Codebooks back from the sidecar (SubSpaces·CodeK tiny rows). */
   private def readCodebooks(s: SparkSession, indexDir: String): Array[Array[Array[Double]]] = {
@@ -581,6 +541,7 @@ object Pq {
       q: Array[Float],
       k: Int = 5,
       excludeId: Option[Long] = None): DataFrame = {
+    PersistedIndex.requireFormat(s, PqIndex, indexDir)
     val cb = readCodebooks(s, indexDir)
     val qd = normalize(q.map(_.toDouble))
     val sd = qd.length / SubSpaces
@@ -718,102 +679,33 @@ object Pq {
   def writeIvfPqIndex(
       s: SparkSession, dir: String, outDir: String,
       trainDir: Option[String] = None): Unit = {
-    import s.implicits._
     val td = trainDir.getOrElse(dir)
     val centroids = KMeansVec.fit(s, td, KMeansVec.K, iters = 1)._1
     val cb = trainedCodebooks(s, td)
-    val enc = encodeUdf(cb)
-    Tables.t(s, dir, "embeddings")
-      .filter(col("vec_id") =!= VectorQueries.QueryVecId)
-      .filter(graft.functions.VectorFunctions.l2norm(col("embedding")) > 0)
-      .withColumn("cluster", KMeansVec.assignUdf(centroids)(col("embedding")).cast("int"))
-      .withColumn("c", enc(col("embedding")).getField("_1"))
-      .select(col("vec_id"), col("label"),
-        expr("transform(c, x -> CAST(x AS TINYINT))").as("codes"), col("cluster"))
+    pqRows(Tables.t(s, dir, "embeddings"), cb, Some(centroids))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("cluster").parquet(s"$outDir/codes")
-    centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cluster", "centroid")
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .json(s"$outDir/centroids")
-    cb.zipWithIndex.flatMap { case (book, sp) =>
-      book.zipWithIndex.map { case (c, code) => (sp, code, c.toSeq) }
-    }.toSeq.toDF("s", "code", "emb")
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$outDir/codebooks")
+    KMeansVec.writeCentroids(s, centroids, outDir)
+    writeCodebooks(s, cb, outDir)
+    PersistedIndex.stamp(s, IvfPqIndex, outDir)
   }
+
+  /** The IVF-PQ index: `cluster=`-partitioned `codes` plus both frozen
+    * sidecars (coarse centroids and product codebooks). */
+  val IvfPqIndex: PersistedIndex.Family = PersistedIndex.Family(
+    "ivf-pq", PersistedIndex.Cells("codes"), sidecars = Seq("centroids", "codebooks"))
 
   /** Append a batch into an EXISTING materialized IVF-PQ index: both
     * quantizers FROZEN from the sidecars (assign + encode, map-only),
     * rows land inside their `cluster=N/` partition dirs. Drift →
     * periodic retrain+rewrite to a fresh generation.
-    * `dedupeExisting` = the [[appendPqIndex]] idempotency option,
-    * with the existing-row scan PRUNED to the batch's own cells
-    * (`cluster IN (...)` resolves at listing time). */
+    * `dedupeExisting`: see [[PersistedIndex.append]]. */
   def appendIvfPqIndex(
       s: SparkSession, indexDir: String, batch: DataFrame,
-      dedupeExisting: Boolean = false): Unit = {
-    val centroids = KMeansVec.readCentroids(s, indexDir)
-    val cb = readCodebooks(s, indexDir)
-    val enc = encodeUdf(cb)
-    val rows = batch
-      .filter(col("vec_id") =!= VectorQueries.QueryVecId)
-      .filter(graft.functions.VectorFunctions.l2norm(col("embedding")) > 0)
-      .withColumn("cluster",
-        KMeansVec.assignUdf(centroids)(col("embedding").cast("array<float>")).cast("int"))
-      .withColumn("c", enc(col("embedding").cast("array<float>")).getField("_1"))
-      .select(col("vec_id"), col("label").cast("int").as("label"),
-        expr("transform(c, x -> CAST(x AS TINYINT))").as("codes"), col("cluster"))
-    val out =
-      if (dedupeExisting) {
-        val cells = rows.select(col("cluster")).distinct()
-          .collect().map(_.getInt(0)).toSeq // bounded by K
-        rows.join(
-          s.read.parquet(s"$indexDir/codes")
-            .filter(col("cluster").isin(cells: _*)).select(col("vec_id")),
-          Seq("vec_id"), "left_anti")
-      } else rows
-    out.write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy("cluster").parquet(s"$indexDir/codes")
-  }
-
-  /** Fold an appended-to IVF-PQ index into a fresh generation: code
-    * rows re-bucket to one file per cell (the [[KMeansVec
-    * .compactIvfIndex]] shape), BOTH frozen sidecars copy
-    * byte-verbatim. */
-  def compactIvfPqIndex(s: SparkSession, indexDir: String, outDir: String): Unit = {
-    s.read.parquet(s"$indexDir/codes")
-      .repartition(col("cluster"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cluster").parquet(s"$outDir/codes")
-    Maintenance.copySidecar(s, s"$indexDir/centroids", s"$outDir/centroids")
-    Maintenance.copySidecar(s, s"$indexDir/codebooks", s"$outDir/codebooks")
-  }
-
-  /** The IVF-PQ merge policy: per-cell file average past
-    * `maxFilesPerCell` triggers [[compactIvfPqIndex]] (the
-    * [[KMeansVec.maintainIvfIndex]] twin on the codes layout). */
-  def maintainIvfPqIndex(
-      s: SparkSession, indexDir: String, outDir: String,
-      maxFilesPerCell: Int = KMeansVec.DefaultMaxFilesPerCell): Boolean = {
-    val (files, cells) =
-      Maintenance.partitionedFileStats(s, s"$indexDir/codes", "cluster")
-    if (cells == 0) {
-      // a zero-row partitioned write commits _SUCCESS but no cluster=
-      // dirs — a VALID empty index → no-op; otherwise fail loudly
-      require(Maintenance.isCommittedEmptyDir(s, s"$indexDir/codes"),
-        s"IVF-PQ index $indexDir/codes lists no cluster= cells and no " +
-          "_SUCCESS marker — layout changed? refusing to silently skip compaction")
-      return false
-    }
-    if (files > maxFilesPerCell.toLong * cells) {
-      compactIvfPqIndex(s, indexDir, outDir)
-      true
-    } else false
-  }
+      dedupeExisting: Boolean = false): Unit =
+    PersistedIndex.append(s, IvfPqIndex, indexDir,
+      pqRows(batch, readCodebooks(s, indexDir), Some(KMeansVec.readCentroids(s, indexDir))),
+      dedupeExisting)
 
   /** Search a materialized IVF-PQ index: driver ranks the persisted
     * centroids (k rows), the ADC phase scans ONLY the probed cells'
@@ -828,6 +720,7 @@ object Pq {
       k: Int = 5,
       nProbe: Int = 3,
       excludeId: Option[Long] = None): DataFrame = {
+    PersistedIndex.requireFormat(s, IvfPqIndex, indexDir)
     val centroids = KMeansVec.readCentroids(s, indexDir)
     val probes = probeIds(centroids, q, nProbe)
     val cb = readCodebooks(s, indexDir)

@@ -199,35 +199,34 @@ object Quantize {
        |WHERE dist IS NOT NULL AND NOT isnan(dist)
        |ORDER BY dist, vec_id LIMIT 5""".stripMargin
 
+  /** The int8 index: a flat `codes` table beside vec_id/label/scale.
+    * SQ has no trained state — the scale is per-vector — so it has no
+    * sidecar and its compaction is a plain rewrite. */
+  val SqIndex: PersistedIndex.Family = PersistedIndex.Family("sq", PersistedIndex.Flat("codes"))
+
+  /** The packed SQ4 index: the same `codes` layout as [[SqIndex]]
+    * with nibble-packed codes — a distinct format, so an SQ search
+    * refuses an SQ4 index and vice versa. */
+  val Sq4Index: PersistedIndex.Family = PersistedIndex.Family("sq4", PersistedIndex.Flat("codes"))
+
   /** Materialize the int8 index: codes stored as ARRAY<TINYINT> —
     * physically 1 byte/dim in parquet vs 4 for the float column —
     * beside vec_id/label/scale. At 100 TB this is the table the
     * phase-1 scan reads; the float table is touched only for the
     * shortlist rescore. */
-  def writeSqIndex(s: SparkSession, dir: String, outDir: String): Unit =
-    withQuant(t(s, dir, "embeddings")
-        // the query sentinel row is not corpus (the writeGraphIndex /
-        // writePqIndex / writeIvfIndex convention)
-        .filter(col("vec_id") =!= VectorQueries.QueryVecId))
-      .select(col("vec_id"), col("label"),
-        expr("transform(qcodes, c -> CAST(c AS TINYINT))").as("codes8"),
-        col("scale"))
+  def writeSqIndex(s: SparkSession, dir: String, outDir: String): Unit = {
+    sqRows(t(s, dir, "embeddings"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$outDir/codes")
+    PersistedIndex.stamp(s, SqIndex, outDir)
+  }
 
-  /** Append a batch into an EXISTING materialized int8 index. SQ has
-    * NO trained state — the scale is per-vector — so append is the
-    * same map-only transform as the build: nothing is read, nothing
-    * can drift, and a retrain-rewrite cycle is never needed (the one
-    * maintenance property the trained structures can't offer).
-    * `dedupeExisting` = the [[graft.ops.Pq.appendPqIndex]] idempotency
-    * option: anti-join the batch against the existing vec_id column
-    * (one slim-column scan of the flat codes table) so an
-    * at-least-once replay converges instead of duplicating. */
-  def appendSqIndex(
-      s: SparkSession, indexDir: String, batch: DataFrame,
-      dedupeExisting: Boolean = false): Unit = {
-    val rows = withQuant(batch
+  /** Code rows (vec_id, label, codes8, scale) of `vecs` — one
+    * derivation for the build and every append. The query sentinel
+    * row is not corpus: persisting it would make an indexed search
+    * over its own corpus return the query itself. */
+  private def sqRows(vecs: DataFrame): DataFrame =
+    withQuant(vecs
         .filter(col("vec_id") =!= VectorQueries.QueryVecId)
         .select(col("vec_id"),
           col("embedding").cast("array<float>").as("embedding"),
@@ -235,44 +234,17 @@ object Quantize {
       .select(col("vec_id"), col("label"),
         expr("transform(qcodes, c -> CAST(c AS TINYINT))").as("codes8"),
         col("scale"))
-    val out =
-      if (dedupeExisting)
-        rows.join(s.read.parquet(s"$indexDir/codes").select(col("vec_id")),
-          Seq("vec_id"), "left_anti")
-      else rows
-    out.write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$indexDir/codes")
-  }
 
-  /** Fold an appended-to int8 index's accumulated files into a fresh
-    * generation — pure file maintenance through [[Maintenance
-    * .compactParquet]] (SQ has no sidecar: the scale is per-vector,
-    * nothing to copy or retrain). */
-  def compactSqIndex(s: SparkSession, indexDir: String, outDir: String): Unit = {
-    Maintenance.compactParquet(s, s"$indexDir/codes", s"$outDir/codes")
-    ()
-  }
-
-  /** The SQ merge policy ([[graft.ops.Pq.maintainPqIndex]] twin on
-    * the flat int8 codes table). Returns true when a compaction
-    * ran. */
-  def maintainSqIndex(
-      s: SparkSession, indexDir: String, outDir: String,
-      maxFiles: Int = Pq.DefaultMaxIndexFiles): Boolean = {
-    val files = Maintenance.parquetFileCount(s, s"$indexDir/codes")
-    if (files == 0) {
-      // a zero-row committed write is a VALID empty index → no-op;
-      // anything else (missing dir, relocated layout) fails loudly
-      require(Maintenance.isCommittedEmptyDir(s, s"$indexDir/codes"),
-        s"SQ index $indexDir/codes lists no parquet data files and no " +
-          "_SUCCESS marker — layout changed? refusing to silently skip compaction")
-      return false
-    }
-    if (files > maxFiles) {
-      compactSqIndex(s, indexDir, outDir)
-      true
-    } else false
-  }
+  /** Append a batch into an EXISTING materialized int8 index. SQ has
+    * NO trained state — the scale is per-vector — so append is the
+    * same map-only transform as the build: nothing is read, nothing
+    * can drift, and a retrain-rewrite cycle is never needed (the one
+    * maintenance property the trained structures can't offer).
+    * `dedupeExisting`: see [[PersistedIndex.append]]. */
+  def appendSqIndex(
+      s: SparkSession, indexDir: String, batch: DataFrame,
+      dedupeExisting: Boolean = false): Unit =
+    PersistedIndex.append(s, SqIndex, indexDir, sqRows(batch), dedupeExisting)
 
   /** Probe search over a materialized int8 index: phase 1 scans ONLY
     * the codes table (column pruning keeps the float embeddings out
@@ -306,6 +278,7 @@ object Quantize {
       q: Array[Float],
       k: Int = 5,
       excludeId: Option[Long] = None): DataFrame = {
+    PersistedIndex.requireFormat(s, SqIndex, indexDir)
     val (qq, nb) = quantOne(q)
     val shortIds = sqPhase1(s, indexDir, codesDistUdf(qq, nb), excludeId)
       .collect().map(_.getLong(0))
@@ -493,8 +466,7 @@ object Quantize {
   /** Materialize the SQ4 index with PHYSICALLY PACKED nibble codes —
     * ceil(dim/2) bytes per vector on disk ([[packNibbles]]); phase 1
     * unpacks in the scan kernel. Same layout contract as
-    * [[writeSqIndex]] (a `codes` table + per-vector scale), so
-    * [[maintainSqIndex]] applies unchanged. */
+    * [[writeSqIndex]] (a `codes` table + per-vector scale). */
   def writeSq4Index(s: SparkSession, dir: String, outDir: String): Unit = {
     val packUdf = udf { (emb: Seq[Float]) =>
       var maxabs = 0.0
@@ -514,6 +486,7 @@ object Quantize {
         col("p._1").as("packed"), col("p._2").as("scale"), col("p._3").as("dim"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$outDir/codes")
+    PersistedIndex.stamp(s, Sq4Index, outDir)
   }
 
   /** Search the packed SQ4 index: phase 1 scans ONLY the packed
@@ -528,6 +501,7 @@ object Quantize {
       q: Array[Float],
       k: Int = 5,
       excludeId: Option[Long] = None): DataFrame = {
+    PersistedIndex.requireFormat(s, Sq4Index, indexDir)
     val (qq, nb) = quantOne4(q)
     val sqrtNb = math.sqrt(nb.toDouble)
     val distUdf = udf { (packed: Array[Byte], dim: Int) =>

@@ -16,8 +16,20 @@ object Tables {
     * so the rule no-ops exactly where a full-input shuffle would be
     * wrong (guide §2.5: repartitioning after the read is the remedy
     * for unsplittable-input skew, not a standing production step). */
-  private def resplitMaxBytes: Long =
-    sys.env.get("SPARK_GRAFT_RESPLIT_MAX_BYTES").map(_.toLong).getOrElse(256L << 20)
+  private lazy val resplitMaxBytes: Long =
+    parseResplitMaxBytes(sys.env.get("SPARK_GRAFT_RESPLIT_MAX_BYTES"))
+
+  /** The [[resplitMaxBytes]] override: absent → 256 MB; anything but a
+    * positive byte count is refused with the variable and the value,
+    * never a bare NumberFormatException from inside a query. */
+  private[graft] def parseResplitMaxBytes(raw: Option[String]): Long = raw match {
+    case None => 256L << 20
+    case Some(v) =>
+      val n = v.trim.toLongOption.filter(_ > 0)
+      require(n.isDefined,
+        s"SPARK_GRAFT_RESPLIT_MAX_BYTES must be a positive byte count, got '$v'")
+      n.get
+  }
 
   /** Minimum rows per re-split slice — below parallelism × this, the
     * table is a lookup relation (nation/region/the query vector) and
@@ -38,8 +50,7 @@ object Tables {
       else Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
         .filter(f => f.isFile && f.getName.endsWith(".parquet"))
     if (files.isEmpty) return None
-    val key = path + "#" + files.sortBy(_.getName)
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString("|").hashCode
+    val key = path + "#" + OpsShared.filesFingerprint(files.toSeq)
     try Some(metaCache.computeIfAbsent(key, _ => {
       val conf = spark.sessionState.newHadoopConf()
       var rows = 0L; var rgs = 0
@@ -88,10 +99,11 @@ object Tables {
     val df = spark.read.parquet(path)
     val par = spark.sparkContext.defaultParallelism
     if (!resplit) return df
+    val maxBytes = resplitMaxBytes // read first: a malformed override fails every re-split read
     parquetMeta(spark, path) match {
       case Some((bytes, rows, rowGroups))
         if rowGroups > 0 && rowGroups < par &&
-          bytes <= resplitMaxBytes && rows >= par * MinRowsPerSlice =>
+          bytes <= maxBytes && rows >= par * MinRowsPerSlice =>
         df.repartition(par)
       case _ => df
     }

@@ -69,14 +69,14 @@ object StreamingDedup {
     * each arriving micro-batch of documents appends its band rows
     * into the persisted bucketed index ([[Dedup.appendBandIndex]]),
     * so the NEXT batch's [[Dedup.dedupIncrementalIndexed]] probe sees
-    * everything that ever streamed in — the ANN analog is
-    * [[StreamingIndex.annAppendStream]]. Per-batch cap counts are the
-    * documented per-segment semantics; a periodic compaction rewrite
-    * ([[Dedup.writeBandIndex]] over the accumulated corpus into a
-    * fresh table generation) restores global counts. foreachBatch is
-    * at-least-once: a replayed batch re-appends its rows — run the
-    * compaction, or dedupe on (doc_id, bkey60) at probe time, if the
-    * source cannot guarantee exactly-once file delivery. */
+    * everything that ever streamed in. The `_counts` sidecar keeps
+    * the probe's hot-bucket cap global across segments; run
+    * `PersistedIndex.maintain(spark, Dedup.BandIndex, table, next)`
+    * from the periodic maintenance job to fold accumulated segment
+    * files into a fresh generation. foreachBatch is at-least-once: a
+    * replayed batch re-appends its rows — dedupe on (doc_id, bkey60)
+    * at probe time if the source cannot guarantee exactly-once file
+    * delivery. */
   def bandAppendStream(
       spark: org.apache.spark.sql.SparkSession,
       inDir: String,

@@ -108,10 +108,10 @@ object StreamingIndex {
     * frozen coarse centroids — so searches see new vectors without a
     * full index rebuild, the same continuous-ingest contract the
     * flat-index upsert above gives the chunk store.
-    * [[graft.ops.GraphAnn.maintainGraphIndex]] is the merge policy
-    * that bounds segment accumulation — run it from the same periodic
-    * maintenance job that retrains codebooks, swapping the live
-    * pointer when it reports a compaction. `maxFilesPerTrigger`
+    * [[graft.ops.PersistedIndex.maintain]] is the merge policy that
+    * bounds segment and file accumulation — run it from the same
+    * periodic maintenance job that retrains codebooks, swapping the
+    * live pointer when it reports a compaction. `maxFilesPerTrigger`
     * bounds a backlog.
     *
     * Delivery: foreachBatch is at-least-once — checkpointed source
@@ -316,7 +316,7 @@ object StreamingIndex {
     // fail at stream CONSTRUCTION if the persisted index predates the
     // current hash derivation — a stale generation would quietly miss
     // every split-parity-affected window for the stream's lifetime
-    Dedup.requireIndexFormat(s, table)
+    graft.ops.PersistedIndex.requireFormat(s, Dedup.SubstrIndex, table)
     val idx = s.table(table).withColumn("hit", lit(1))
     docs
       .select(col("ts"), col("doc_id"), col("text"),
@@ -353,7 +353,7 @@ object StreamingIndex {
   def maximalScrubStream(
       docs: DataFrame, s: SparkSession, table: String): DataFrame = {
     import graft.ops.Dedup
-    Dedup.requireIndexFormat(s, table)
+    graft.ops.PersistedIndex.requireFormat(s, Dedup.MaximalIndex, table)
     // DISTINCT membership: appended segments may re-insert a hash,
     // and a duplicated index row would double the joined position —
     // the fold is on the bucketing key, so it never shuffles

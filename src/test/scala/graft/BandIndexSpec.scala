@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, PersistedIndex}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -75,10 +75,10 @@ class BandIndexSpec extends AnyFunSuite {
   test("maintenance: no-op below the file threshold; compaction yields identical probes with global caps") {
     Dedup.writeBandIndex(spark, sf, "band_idx_m")
     // fresh single-generation index: far below any file threshold
-    assert(!Dedup.maintainBandIndex(spark, "band_idx_m", "band_idx_m2"))
+    assert(!PersistedIndex.maintain(spark, Dedup.BandIndex, "band_idx_m", "band_idx_m2"))
     // force the policy: threshold 0 files per bucket always triggers
-    assert(Dedup.maintainBandIndex(spark, "band_idx_m", "band_idx_m2",
-      maxFilesPerBucket = 0))
+    assert(PersistedIndex.maintain(spark, Dedup.BandIndex, "band_idx_m", "band_idx_m2",
+      threshold = 0))
     val before = Dedup.dedupIncrementalIndexed(spark, sf, "band_idx_m").collect().toSeq
     val after = Dedup.dedupIncrementalIndexed(spark, sf, "band_idx_m2").collect().toSeq
     assert(after == before, "generation swap must be answer-stable")
@@ -134,7 +134,7 @@ class BandIndexSpec extends AnyFunSuite {
       s"the global sidecar cap must match the inline detector: ${indexed.toSeq}")
     // compaction folds the sidecar and preserves the answer
     spark.sql("DROP TABLE IF EXISTS band_idx_straddle_c")
-    Dedup.compactBandIndex(spark, "band_idx_straddle", "band_idx_straddle_c")
+    PersistedIndex.compact(spark, Dedup.BandIndex, "band_idx_straddle", "band_idx_straddle_c")
     val compacted = Dedup.dedupIncrementalIndexed(spark, s"$tmp/full", "band_idx_straddle_c")
       .collect()
     assert(compacted.isEmpty,

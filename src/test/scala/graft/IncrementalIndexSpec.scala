@@ -1,6 +1,7 @@
 package graft
 
-import graft.ops.{GraphAnn, KMeansVec, Maintenance, Pq, Quantize, VectorQueries}
+import graft.ops.{GraphAnn, KMeansVec, Maintenance, PersistedIndex, Pq, Quantize, VectorQueries}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -61,7 +62,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
     GraphAnn.writeGraphIndex(spark, halfDir, inc)
     GraphAnn.appendGraphIndex(spark, inc, laterBatch)
     val compacted = tmp.resolve("gen2").toString
-    GraphAnn.compactGraphIndex(spark, inc, compacted)
+    PersistedIndex.compact(spark, GraphAnn.GraphIndex, inc, compacted)
     // merged back to the derived shard count (fixture floor = 8)
     val shardDirs = new java.io.File(compacted).listFiles()
       .count(_.getName.startsWith("shard="))
@@ -89,11 +90,11 @@ class IncrementalIndexSpec extends AnyFunSuite {
     assert(grown == base + 3, s"expected $base+3 segments, got $grown")
     val gen2 = tmp.resolve("gen2").toString
     // at or below the threshold: policy must NOT touch anything
-    assert(!GraphAnn.maintainGraphIndex(spark, inc, gen2, maxSegments = grown))
+    assert(!PersistedIndex.maintain(spark, GraphAnn.GraphIndex, inc, gen2, threshold = grown))
     assert(!new java.io.File(gen2).exists(), "no-op must not write a generation")
     // past it: compaction runs into the fresh generation, merged back
     // to the derived shard count, with unchanged answers
-    assert(GraphAnn.maintainGraphIndex(spark, inc, gen2, maxSegments = grown - 1))
+    assert(PersistedIndex.maintain(spark, GraphAnn.GraphIndex, inc, gen2, threshold = grown - 1))
     val merged = segs(gen2)
     assert(merged <= GraphAnn.Shards, s"compaction left $merged segments")
     val q = queryVec
@@ -120,9 +121,9 @@ class IncrementalIndexSpec extends AnyFunSuite {
     batches.foreach(b => KMeansVec.appendIvfIndex(spark, ivf, b))
     val ivfBefore = KMeansVec.ivfSearchIndexed(spark, ivf, q).collect().toSeq
     val ivf2 = tmp.resolve("ivf2").toString
-    assert(!KMeansVec.maintainIvfIndex(spark, ivf, ivf2, maxFilesPerCell = 100000))
+    assert(!PersistedIndex.maintain(spark, KMeansVec.IvfIndex, ivf, ivf2, threshold = 100000))
     assert(!new java.io.File(ivf2).exists(), "no-op must not write a generation")
-    assert(KMeansVec.maintainIvfIndex(spark, ivf, ivf2, maxFilesPerCell = 1))
+    assert(PersistedIndex.maintain(spark, KMeansVec.IvfIndex, ivf, ivf2, threshold = 1))
     val (f2, c2) = Maintenance.partitionedFileStats(spark, s"$ivf2/vectors", "cluster")
     assert(f2 == c2, s"compaction must fold to one file per cell: $f2 files / $c2 cells")
     assert(KMeansVec.ivfSearchIndexed(spark, ivf2, q).collect().toSeq == ivfBefore,
@@ -134,8 +135,8 @@ class IncrementalIndexSpec extends AnyFunSuite {
     batches.foreach(b => Pq.appendPqIndex(spark, pq, b))
     val pqBefore = Pq.pqSearchIndexed(spark, pq, dir, q).collect().toSeq
     val pq2 = tmp.resolve("pq2").toString
-    assert(!Pq.maintainPqIndex(spark, pq, pq2, maxFiles = 100000))
-    assert(Pq.maintainPqIndex(spark, pq, pq2, maxFiles = 1))
+    assert(!PersistedIndex.maintain(spark, Pq.PqIndex, pq, pq2, threshold = 100000))
+    assert(PersistedIndex.maintain(spark, Pq.PqIndex, pq, pq2, threshold = 1))
     assert(Maintenance.parquetFileCount(spark, s"$pq2/codes") <
       Maintenance.parquetFileCount(spark, s"$pq/codes"),
       "compaction must reduce the codes file count")
@@ -148,8 +149,8 @@ class IncrementalIndexSpec extends AnyFunSuite {
     batches.foreach(b => Pq.appendIvfPqIndex(spark, ipq, b))
     val ipqBefore = Pq.ivfPqSearchIndexed(spark, ipq, dir, q).collect().toSeq
     val ipq2 = tmp.resolve("ipq2").toString
-    assert(!Pq.maintainIvfPqIndex(spark, ipq, ipq2, maxFilesPerCell = 100000))
-    assert(Pq.maintainIvfPqIndex(spark, ipq, ipq2, maxFilesPerCell = 1))
+    assert(!PersistedIndex.maintain(spark, Pq.IvfPqIndex, ipq, ipq2, threshold = 100000))
+    assert(PersistedIndex.maintain(spark, Pq.IvfPqIndex, ipq, ipq2, threshold = 1))
     assert(Pq.ivfPqSearchIndexed(spark, ipq2, dir, q).collect().toSeq == ipqBefore,
       "IVF-PQ generation swap must be answer-stable")
 
@@ -159,8 +160,8 @@ class IncrementalIndexSpec extends AnyFunSuite {
     batches.foreach(b => Quantize.appendSqIndex(spark, sq, b))
     val sqBefore = Quantize.sqSearchIndexed(spark, sq, dir, q).collect().toSeq
     val sq2 = tmp.resolve("sq2").toString
-    assert(!Quantize.maintainSqIndex(spark, sq, sq2, maxFiles = 100000))
-    assert(Quantize.maintainSqIndex(spark, sq, sq2, maxFiles = 1))
+    assert(!PersistedIndex.maintain(spark, Quantize.SqIndex, sq, sq2, threshold = 100000))
+    assert(PersistedIndex.maintain(spark, Quantize.SqIndex, sq, sq2, threshold = 1))
     assert(Quantize.sqSearchIndexed(spark, sq2, dir, q).collect().toSeq == sqBefore,
       "SQ generation swap must be answer-stable")
   }
@@ -380,9 +381,9 @@ class IncrementalIndexSpec extends AnyFunSuite {
     val g0 = tmp.resolve("g0").toString
     KMeansVec.writeIvfIndex(spark, halfDir, g0)
     val g1 = tmp.resolve("g1").toString
-    assert(KMeansVec.maintainIvfIndex(spark, g0, g1, maxFilesPerCell = 0))
+    assert(PersistedIndex.maintain(spark, KMeansVec.IvfIndex, g0, g1, threshold = 0))
     val g2 = tmp.resolve("g2").toString
-    assert(KMeansVec.maintainIvfIndex(spark, g1, g2, maxFilesPerCell = 0))
+    assert(PersistedIndex.maintain(spark, KMeansVec.IvfIndex, g1, g2, threshold = 0))
     val before = KMeansVec.ivfSearchIndexed(spark, g2, q).collect().toSeq
     def exists(d: String) = new java.io.File(d).exists()
 
@@ -412,7 +413,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
     // catalog-table generations (band index family): sidecar rides along
     val sfFix = "/root/testdata/sf0.001"
     graft.ops.Dedup.writeBandIndex(spark, sfFix, "band_vac_g0")
-    graft.ops.Dedup.compactBandIndex(spark, "band_vac_g0", "band_vac_g1")
+    PersistedIndex.compact(spark, graft.ops.Dedup.BandIndex, "band_vac_g0", "band_vac_g1")
     val probeBefore =
       graft.ops.Dedup.dedupIncrementalIndexed(spark, sfFix, "band_vac_g1").collect().toSeq
     intercept[IllegalArgumentException] {
@@ -471,7 +472,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
     // (3) same two guards on the catalog-table form
     val sfFix = "/root/testdata/sf0.001"
     graft.ops.Dedup.writeBandIndex(spark, sfFix, "band_vac2_g0")
-    graft.ops.Dedup.compactBandIndex(spark, "band_vac2_g0", "band_vac2_g1")
+    PersistedIndex.compact(spark, graft.ops.Dedup.BandIndex, "band_vac2_g0", "band_vac2_g1")
     intercept[IllegalArgumentException] {
       Maintenance.vacuumGenerationTables(
         spark, Seq("band_vac2_g0", "band_vac2_nope", "band_vac2_g1"), "band_vac2_g1")
@@ -524,6 +525,66 @@ class IncrementalIndexSpec extends AnyFunSuite {
     } finally {
       spark.conf.set("spark.sql.caseSensitive", "false")
       spark.sql("DROP TABLE IF EXISTS vac_cs_live")
+    }
+  }
+
+  private case class Case(
+      family: PersistedIndex.Family,
+      build: String => Unit,
+      append: String => Unit,
+      search: String => DataFrame)
+
+  private def cases = Seq(
+    Case(Quantize.SqIndex, Quantize.writeSqIndex(spark, halfDir, _),
+      Quantize.appendSqIndex(spark, _, laterBatch),
+      Quantize.sqSearchIndexed(spark, _, dir, queryVec)),
+    Case(Pq.PqIndex, Pq.writePqIndex(spark, halfDir, _),
+      Pq.appendPqIndex(spark, _, laterBatch),
+      Pq.pqSearchIndexed(spark, _, dir, queryVec)),
+    Case(Pq.IvfPqIndex, Pq.writeIvfPqIndex(spark, halfDir, _),
+      Pq.appendIvfPqIndex(spark, _, laterBatch),
+      Pq.ivfPqSearchIndexed(spark, _, dir, queryVec)),
+    Case(KMeansVec.IvfIndex, KMeansVec.writeIvfIndex(spark, halfDir, _, iters = 1),
+      KMeansVec.appendIvfIndex(spark, _, laterBatch),
+      KMeansVec.ivfSearchIndexed(spark, _, queryVec)),
+    Case(GraphAnn.GraphIndex, GraphAnn.writeGraphIndex(spark, halfDir, _),
+      GraphAnn.appendGraphIndex(spark, _, laterBatch),
+      GraphAnn.graphSearchIndexed(spark, _, queryVec)))
+
+  /** The format stamp and the in-place refusal of the shared lifecycle
+    * ([[PersistedIndex]]), over every directory-backed family. */
+  test("directory families refuse in-place compaction and unstamped or foreign-version indexes") {
+    def mustRefuse(what: String)(body: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](body)
+      assert(e.getMessage.contains("format") && e.getMessage.contains("rebuild"),
+        s"$what must say what to do: ${e.getMessage}")
+    }
+    cases.foreach { c =>
+      val name = c.family.name
+      val root = Files.createTempDirectory(s"graft-pidx-$name").resolve("g1").toString
+      c.build(root)
+      val before = c.search(root).collect().toSeq
+      assert(before.nonEmpty, s"$name answers")
+      intercept[IllegalArgumentException](PersistedIndex.compact(spark, c.family, root, root))
+      assert(c.search(root).collect().toSeq == before,
+        s"$name: refused compaction left the input intact")
+
+      // rewritten through the Hadoop API, as any writer of the index
+      // would, so the local filesystem's checksum file follows
+      val stamp = new org.apache.hadoop.fs.Path(root, PersistedIndex.StampFile)
+      val fs = stamp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Seq(None, Some(s"$name:${c.family.version + 1}")).foreach { bad =>
+        bad match {
+          case None => fs.delete(stamp, false)
+          case Some(v) =>
+            val out = fs.create(stamp, true)
+            try out.write(v.getBytes("UTF-8")) finally out.close()
+        }
+        mustRefuse(s"$name search, stamp $bad")(c.search(root).collect())
+        mustRefuse(s"$name append, stamp $bad")(c.append(root))
+        mustRefuse(s"$name compaction, stamp $bad")(
+          PersistedIndex.compact(spark, c.family, root, s"$root-g2"))
+      }
     }
   }
 }

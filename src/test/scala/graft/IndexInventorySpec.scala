@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Dedup, Maintenance}
+import graft.ops.{Dedup, Maintenance, PersistedIndex}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The persisted-index inventory ([[Maintenance.indexInventoryOf]]):
@@ -65,7 +65,7 @@ class IndexInventorySpec extends AnyFunSuite {
     assert(appended("substr").getLong(3) == 12L, "6 re-inserted hashes double the entries")
     assert(appended("substr").getLong(4) == 6L, "the key space is unchanged")
     spark.sql("DROP TABLE IF EXISTS inv_dbt_sub_g2")
-    Dedup.compactSubstrIndex(spark, sub, "inv_dbt_sub_g2")
+    PersistedIndex.compact(spark, Dedup.SubstrIndex, sub, "inv_dbt_sub_g2")
     val compacted = Maintenance.indexInventoryOf(spark, "inv_dbt_sub_g2", mx, bd)
       .collect().map(r => r.getString(0) -> r).toMap
     assert(compacted("substr").getLong(3) == 6L && compacted("substr").getLong(4) == 6L)
@@ -96,7 +96,7 @@ class IndexInventorySpec extends AnyFunSuite {
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     Dedup.writeBandIndexOf(tinyDocs, "gen_g1")
     Dedup.appendBandIndex(tinyDocs.filter(col("doc_id") === 1L), "gen_g1")
-    Dedup.compactBandIndex(spark, "gen_g1", "gen_g2")
+    PersistedIndex.compact(spark, Dedup.BandIndex, "gen_g1", "gen_g2")
     val before = Maintenance.indexGenerationInventory(
       spark, Seq("gen_g1", "gen_g2"), live = "gen_g2").collect()
     assert(before.map(r =>
@@ -174,7 +174,7 @@ class IndexInventorySpec extends AnyFunSuite {
     // table form: live is g1 but the history ends at g2
     val (_, _, bd) = buildAll("inv_abort")
     spark.sql("DROP TABLE IF EXISTS inv_abort_bd2")
-    Dedup.compactBandIndex(spark, bd, "inv_abort_bd2")
+    PersistedIndex.compact(spark, Dedup.BandIndex, bd, "inv_abort_bd2")
     val tbl = Maintenance.indexGenerationInventory(
       spark, Seq(bd, "inv_abort_bd2"), live = bd).collect()
     assert(tbl.forall(!_.getBoolean(3)),

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Maintenance
+import graft.ops.{Maintenance, PersistedIndex}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -100,36 +100,39 @@ class MaintenanceSpec extends AnyFunSuite {
     val emptyVecs = Seq.empty[(Long, Int, Seq[Float])]
       .toDF("vec_id", "cluster", "embedding")
     emptyVecs.write.partitionBy("cluster").parquet(s"$root/ivf/vectors")
-    assert(!graft.ops.KMeansVec.maintainIvfIndex(spark, s"$root/ivf", s"$root/ivf2"))
+    assert(!PersistedIndex.maintain(spark, graft.ops.KMeansVec.IvfIndex,
+      s"$root/ivf", s"$root/ivf2"))
 
     Seq.empty[(Long, Int, Seq[Byte])].toDF("vec_id", "cluster", "codes")
       .write.partitionBy("cluster").parquet(s"$root/ivfpq/codes")
-    assert(!graft.ops.Pq.maintainIvfPqIndex(spark, s"$root/ivfpq", s"$root/ivfpq2"))
+    assert(!PersistedIndex.maintain(spark, graft.ops.Pq.IvfPqIndex,
+      s"$root/ivfpq", s"$root/ivfpq2"))
 
     // zero-row FLAT writes: _SUCCESS with zero-or-one (schema-only)
     // data files — either way the policy is a no-op
     Seq.empty[(Long, Seq[Byte])].toDF("vec_id", "codes")
       .write.parquet(s"$root/pq/codes")
-    assert(!graft.ops.Pq.maintainPqIndex(spark, s"$root/pq", s"$root/pq2"))
+    assert(!PersistedIndex.maintain(spark, graft.ops.Pq.PqIndex, s"$root/pq", s"$root/pq2"))
     Seq.empty[(Long, Seq[Byte])].toDF("vec_id", "codes")
       .write.parquet(s"$root/sq/codes")
-    assert(!graft.ops.Quantize.maintainSqIndex(spark, s"$root/sq", s"$root/sq2"))
+    assert(!PersistedIndex.maintain(spark, graft.ops.Quantize.SqIndex, s"$root/sq", s"$root/sq2"))
 
     // an EMPTY-CORPUS band index through the real writer path
     val edir = Files.createTempDirectory("graft-emptyband").toString
     Seq.empty[(Long, String, String)].toDF("doc_id", "text", "source")
       .write.parquet(s"$edir/documents.parquet")
     graft.ops.Dedup.writeBandIndex(spark, edir, "band_idx_empty")
-    assert(!graft.ops.Dedup.maintainBandIndex(spark, "band_idx_empty", "band_idx_empty2"))
+    assert(!PersistedIndex.maintain(spark, graft.ops.Dedup.BandIndex,
+      "band_idx_empty", "band_idx_empty2"))
 
     // missing layout: still a loud failure, never a silent skip
     assertThrows[Exception] {
-      graft.ops.KMeansVec.maintainIvfIndex(spark, s"$root/nope", s"$root/nope2")
+      PersistedIndex.maintain(spark, graft.ops.KMeansVec.IvfIndex, s"$root/nope", s"$root/nope2")
     }
     // dir exists, no data files, no _SUCCESS marker: layout changed → loud
     new java.io.File(s"$root/bare/codes").mkdirs()
     assertThrows[IllegalArgumentException] {
-      graft.ops.Quantize.maintainSqIndex(spark, s"$root/bare", s"$root/bare2")
+      PersistedIndex.maintain(spark, graft.ops.Quantize.SqIndex, s"$root/bare", s"$root/bare2")
     }
   }
 

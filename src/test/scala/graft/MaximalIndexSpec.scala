@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, PersistedIndex}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -87,7 +87,7 @@ class MaximalIndexSpec extends AnyFunSuite {
     assert(probeBefore == Dedup.maximalScrubIncremental(spark, sf).collect().toSeq,
       "indexed maximal scrub must equal the inline incremental scrub")
     spark.sql("DROP TABLE IF EXISTS mx_idx_g2")
-    Dedup.compactMaximalIndex(spark, "mx_idx_seg", "mx_idx_g2")
+    PersistedIndex.compact(spark, Dedup.MaximalIndex, "mx_idx_seg", "mx_idx_g2")
     assert(Dedup.maximalScrubIndexed(spark, sf, "mx_idx_g2").collect().toSeq == probeBefore,
       "a compacted generation must answer identically")
     // the compacted generation holds ONE row per hash

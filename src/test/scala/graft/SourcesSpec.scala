@@ -42,6 +42,17 @@ class SourcesSpec extends AnyFunSuite {
     assert(latin == "café latin1")
   }
 
+  test("scan prunes directories below the root only: a corpus under an ancestor named build is indexed") {
+    val root = Files.createDirectories(Files.createTempDirectory("graft-anc").resolve("build"))
+    Files.createDirectories(root.resolve("app"))
+    Files.createDirectories(root.resolve("node_modules"))
+    Files.write(root.resolve("app/server.log"), "kept".getBytes(StandardCharsets.UTF_8))
+    Files.write(root.resolve("node_modules/x.log"), "pruned".getBytes(StandardCharsets.UTF_8))
+    val sources = Sources.readTextFiles(spark, root.toString)
+      .select("source").collect().map(_.getString(0)).toSet
+    assert(sources == Set("app/server.log"))
+  }
+
   test("decode cascade: invalid UTF-8 falls back to latin1 (total)") {
     assert(Sources.decodeBytes("plain ascii".getBytes) == "plain ascii")
     assert(Sources.decodeBytes("café".getBytes(StandardCharsets.UTF_8)) == "café")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, PersistedIndex}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -61,7 +61,8 @@ class SubstrIndexSpec extends AnyFunSuite {
     mustRefuse(Dedup.substrScrubIndexed(spark, sf, "substr_idx_stale").collect())
     mustRefuse(Dedup.appendSubstrIndex(
       spark.read.parquet(s"$sf/documents.parquet"), "substr_idx_stale"))
-    mustRefuse(Dedup.compactSubstrIndex(spark, "substr_idx_stale", "substr_idx_stale_g2"))
+    mustRefuse(PersistedIndex.compact(spark, Dedup.SubstrIndex,
+      "substr_idx_stale", "substr_idx_stale_g2"))
     mustRefuse(graft.streaming.StreamingIndex.substrScrubStream(
       spark.readStream.schema("ts TIMESTAMP, doc_id LONG, text STRING")
         .parquet(java.nio.file.Files.createTempDirectory("graft-stale").toString),
@@ -77,7 +78,8 @@ class SubstrIndexSpec extends AnyFunSuite {
     Dedup.writeBandIndex(spark, sf, "band_idx_stale")
     spark.sql("ALTER TABLE band_idx_stale UNSET TBLPROPERTIES ('graft.index.format')")
     mustRefuse(Dedup.dedupIncrementalIndexed(spark, sf, "band_idx_stale").collect())
-    mustRefuse(Dedup.compactBandIndex(spark, "band_idx_stale", "band_idx_stale_g2"))
+    mustRefuse(PersistedIndex.compact(spark, Dedup.BandIndex,
+      "band_idx_stale", "band_idx_stale_g2"))
     // current-format builds still probe (the stamp rides the write)
     Dedup.writeSubstrIndex(spark, sf, "substr_idx_fmt_ok")
     assert(Dedup.substrScrubIndexed(spark, sf, "substr_idx_fmt_ok").collect().nonEmpty)
@@ -145,10 +147,10 @@ class SubstrIndexSpec extends AnyFunSuite {
     Dedup.appendSubstrIndex(d.filter(col("doc_id") % 2 === 0), "substr_idx_m")
     val before = Dedup.substrScrubIndexed(spark, sf, "substr_idx_m").collect().toSeq
     // generous cap: no compaction
-    assert(!Dedup.maintainSubstrIndex(spark, "substr_idx_m", "substr_idx_m2"))
+    assert(!PersistedIndex.maintain(spark, Dedup.SubstrIndex, "substr_idx_m", "substr_idx_m2"))
     // forcing the cap to 0 triggers the rewrite
-    assert(Dedup.maintainSubstrIndex(spark, "substr_idx_m", "substr_idx_m2",
-      maxFilesPerBucket = 0))
+    assert(PersistedIndex.maintain(spark, Dedup.SubstrIndex, "substr_idx_m", "substr_idx_m2",
+      threshold = 0))
     val after = Dedup.substrScrubIndexed(spark, sf, "substr_idx_m2").collect().toSeq
     assert(after == before, "generation swap must be answer-stable")
     // compaction dedups the hash rows appended twice across segments
